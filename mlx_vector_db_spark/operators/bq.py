@@ -53,9 +53,11 @@ from pyspark.sql import functions as F
 
 from mlx_vector_db_spark.operators.knn import (
     EXPR_MAX_QUERIES,
+    QueryBlock,
     _bounded_query_count,
     _drop_null_vectors,
     knn_join,
+    query_block,
 )
 from mlx_vector_db_spark.operators.topk import top_k_per_group
 from mlx_vector_db_spark.rebalance import rebalance_for_compute
@@ -249,7 +251,7 @@ def train_bq(
 
 def bq_search_batch(
     coded: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | QueryBlock,
     bq: BQModel,
     k: int = 10,
     metric: str = "cosine",
@@ -307,17 +309,11 @@ def bq_search_batch(
     """
     if metric not in ("cosine", "euclidean", "dot_product"):
         raise ValueError(f"unknown metric {metric!r}")
-    queries = _drop_null_vectors(queries, query_vec_col)
-    # Arrow collect (not row objects) — one batched transfer, no
-    # per-row Python deserialization (the ADVICE r9 collect policy).
-    qpdf = queries.select(query_id_col, query_vec_col).toPandas()
-    if len(qpdf) == 0:
-        raise ValueError("empty query set")
-    q_ids = qpdf[query_id_col].to_numpy(dtype=np.int64)
-    Q = np.asarray(list(qpdf[query_vec_col]), dtype=np.float64)
+    queries = query_block(queries, query_id_col, query_vec_col)
+    q_ids, Q = queries.arrays()
+    m = len(q_ids)
     take = int(k) * int(overfetch)
     if exact_rerank and delegate_saturation is not None:
-        m = len(qpdf)
         sat_bound = int(m * take / float(delegate_saturation))
         n_coded = _bounded_query_count(coded.select(id_col), sat_bound)
         if n_coded <= sat_bound:
@@ -421,7 +417,7 @@ def bq_search_batch(
             F.col("_hamming").alias("hamming"),
         )
     cand_ids = cand_topk.select(id_col).distinct()
-    big_batch = len(qpdf) > EXPR_MAX_QUERIES
+    big_batch = m > EXPR_MAX_QUERIES
     if big_batch:
         # knn_join's delegation gate probes the vectors side eagerly
         # (bounded count job) — checkpoint the candidate plan so pass 1
@@ -450,7 +446,7 @@ def bq_search_batch(
 
 def tune_overfetch_bq(
     coded: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | QueryBlock,
     bq: BQModel,
     k: int = 10,
     target_recall: float = 0.9,
@@ -478,8 +474,9 @@ def tune_overfetch_bq(
     if not (0.0 < target_recall <= 1.0):
         raise ValueError(f"target_recall must be in (0, 1], got {target_recall}")
     # same NULL rule as bq_search_batch/knn_join: NULL-vector queries
-    # never participate in the truth set or the rungs
-    queries = _drop_null_vectors(queries, query_vec_col)
+    # never participate in the truth set or the rungs; one query
+    # collect serves every rung
+    queries = query_block(queries, query_id_col, query_vec_col)
     ladder = (
         sorted({max(1, int(c)) for c in candidates})
         if candidates is not None

@@ -137,25 +137,32 @@ def _signature_numpy(hdf: DataFrame, num_hashes: int, a: list[int], b: list[int]
                 sent = np.full(n_rows, P, dtype=np.int64)
                 sig_cols = [pa.array(sent)] * K
             else:
-                # fold64 -> 32-bit registers once per batch
+                # the batch's own elements, folded to 32-bit registers
+                # once per batch
+                base, end = int(starts[0]), int(ends[-1])
                 h = (
-                    np.asarray(vals64, dtype=np.int64) & np.int64((1 << 32) - 1)
+                    np.asarray(vals64[base:end], dtype=np.int64)
+                    & np.int64((1 << 32) - 1)
                 )
-                # reduceat needs every index < n_elems; empty rows are
-                # patched afterwards so the clamped garbage never shows
-                starts_c = np.minimum(starts, n_elems - 1)
+                n = end - base
                 buf = np.empty_like(h)
-                tmp = np.empty_like(h)
+                # one sentinel P past the end: a trailing empty row's
+                # start (== n) stays a valid reduceat index, and the
+                # last segment ends at the sentinel, which never wins
+                # a min. Empty rows read garbage and are patched below
+                tmp = np.empty(n + 1, dtype=np.int64)
+                tmp[n] = P
+                perm = tmp[:n]
                 for k in range(K):
                     np.multiply(h, A[k], out=buf)
                     buf += B[k]
                     # branchless Mersenne fold == pmod(buf, P) for
                     # 0 <= buf < 2^63 (see docstring)
-                    np.bitwise_and(buf, P, out=tmp)
+                    np.bitwise_and(buf, P, out=perm)
                     buf >>= np.int64(61)
-                    tmp += buf
-                    tmp -= np.where(tmp >= P, np.int64(P), np.int64(0))
-                    mins = np.minimum.reduceat(tmp, starts_c)
+                    perm += buf
+                    perm -= np.where(perm >= P, np.int64(P), np.int64(0))
+                    mins = np.minimum.reduceat(tmp, starts - base)
                     if empty.any():
                         mins[empty] = P
                     sig_cols.append(pa.array(mins))
@@ -330,27 +337,6 @@ def fanout_autocap(
     if best is None:
         best = JACCARD_AUTOCAP_MIN
     return min(JACCARD_AUTOCAP_MAX, max(JACCARD_AUTOCAP_MIN, int(best)))
-
-    w = Window.orderBy("_f").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cum = hist.withColumn(
-        "_cum",
-        F.sum(F.col("_cnt") * F.expr("_f * (_f - 1) DIV 2")).over(w),
-    )
-    return (
-        cum.crossJoin(F.broadcast(nrows_df))
-        .where(F.col("_cum") <= F.lit(int(pair_budget)) * F.col("_nr"))
-        .agg(
-            F.least(
-                F.lit(JACCARD_AUTOCAP_MAX),
-                F.greatest(
-                    F.lit(JACCARD_AUTOCAP_MIN),
-                    F.coalesce(F.max("_f"), F.lit(JACCARD_AUTOCAP_MIN)),
-                ),
-            )
-            .cast("long")
-            .alias("_cap")
-        )
-    )
 
 
 def minhash_lsh_pairs(

@@ -54,6 +54,8 @@ from mlx_vector_db_spark.operators.topk import top_k_per_group
 from mlx_vector_db_spark.rebalance import rebalance_for_compute
 
 __all__ = [
+    "QueryBlock",
+    "query_block",
     "knn_query",
     "knn_join",
     "knn_join_blocked",
@@ -202,6 +204,74 @@ def _drop_null_vectors(df: DataFrame, vec_col: str) -> DataFrame:
     )
 
 
+class QueryBlock:
+    """One call's query set: the NULL-free query rows as a frame, plus
+    their ``(id, vector)`` arrays once collected to the driver.
+
+    Every batch operator takes a DataFrame or a QueryBlock as its
+    ``queries`` argument and normalises it with :func:`query_block`. A
+    caller that hands the same block to each kernel it reaches
+    (``VectorStore.batch_query`` does) pays one query collect per call
+    instead of one per kernel. The collect goes through Arrow: the
+    vectors land as one contiguous numpy matrix, not Python rows.
+    """
+
+    def __init__(self, frame: DataFrame, id_col: str, vec_col: str) -> None:
+        self.frame = frame
+        self.id_col = id_col
+        self.vec_col = vec_col
+        self.ids: np.ndarray | None = None
+        self.vecs: np.ndarray | None = None
+        self.complete = False
+
+    def collect(self, limit: int | None = None) -> QueryBlock:
+        """Collect at most ``limit`` rows (all when None), unless the
+        block already holds them. A size gate that only asks "at least
+        ``limit`` queries?" passes the limit: fewer rows back means the
+        block is whole, so it needs no count job."""
+        held = 0 if self.ids is None else len(self.ids)
+        if self.complete or (limit is not None and held >= limit):
+            return self
+        rows = self.frame.select(self.id_col, self.vec_col)
+        if limit is not None:
+            rows = rows.limit(int(limit))
+        tbl = rows.toArrow()
+        self.ids = tbl.column(0).combine_chunks().to_numpy(zero_copy_only=False)
+        vec = tbl.column(1).combine_chunks()
+        n = len(vec)
+        flat = vec.flatten().to_numpy(zero_copy_only=False)
+        dim = len(flat) // n if n else 0
+        if n and not np.all(vec.value_lengths().to_numpy() == dim):
+            raise ValueError(f"query vectors in {self.vec_col!r} differ in length")
+        self.vecs = flat.astype(np.float64, copy=False).reshape(n, dim)
+        self.complete = limit is None or n < limit
+        return self
+
+    def arrays(self) -> tuple[np.ndarray, np.ndarray]:
+        """The whole block as ``(int64 ids, float64 (m, dim) vectors)``;
+        an empty query set is a caller bug and raises ``ValueError``."""
+        self.collect()
+        if not len(self.ids):
+            raise ValueError("empty query set")
+        return self.ids.astype(np.int64, copy=False), self.vecs
+
+
+def query_block(
+    queries: DataFrame | QueryBlock,
+    query_id_col: str = "query_id",
+    query_vec_col: str = "embedding",
+) -> QueryBlock:
+    """Normalise an operator's ``queries`` argument: a QueryBlock passes
+    through as is; a DataFrame is checked for its columns and gets the
+    engine-wide NULL rule (:func:`_drop_null_vectors`). Runs no job."""
+    if isinstance(queries, QueryBlock):
+        return queries
+    _validate(queries, 1, query_vec_col=query_vec_col, query_id_col=query_id_col)
+    return QueryBlock(
+        _drop_null_vectors(queries, query_vec_col), query_id_col, query_vec_col
+    )
+
+
 def _order(metric: str, score: Column, id_col: str) -> list[Column]:
     """Deterministic total order: best score first, then id ASC
     (FIXTURES.md tie-break; the reference's argsort tie order is
@@ -310,7 +380,7 @@ def _bounded_query_count(queries: DataFrame, bound: int) -> int:
 
 def knn_join(
     vectors: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | QueryBlock,
     k: int = 10,
     metric: str = "cosine",
     filter_metadata: Mapping[str, Any] | None = None,
@@ -352,9 +422,10 @@ def knn_join(
       (the alternative — an output dtype that changes with the data
       size — breaks fixed-schema sinks).
     - **Eagerness**: the delegation gate runs bounded LIMIT-count probe
-      jobs at CALL time (memoized per plan+bound). If the vectors side
-      is itself an expensive computed stage (a semi-join on a candidate
-      set), either pass ``allow_blocked=False`` or
+      jobs at CALL time (memoized per plan+bound); a collected
+      :class:`QueryBlock` answers the query side without one. If the
+      vectors side is itself an expensive computed stage (a semi-join
+      on a candidate set), either pass ``allow_blocked=False`` or
       ``localCheckpoint(eager=False)`` the candidate plan first so the
       probe's execution is reused — see bq/pq_search_batch pass 2.
 
@@ -368,23 +439,27 @@ def knn_join(
     for any table whose size the caller cannot bound.
     """
     _validate(vectors, k, vec_col=vec_col, id_col=id_col)
-    _validate(queries, k, query_vec_col=query_vec_col, query_id_col=query_id_col)
+    qb = query_block(queries, query_id_col, query_vec_col)
     if (
         allow_blocked
         and broadcast_queries
-        and isinstance(queries.schema[query_id_col].dataType, LongType)
+        and isinstance(qb.frame.schema[query_id_col].dataType, LongType)
         and isinstance(vectors.schema[id_col].dataType, LongType)
     ):
         # medium/large batches delegate to the Arrow BLAS path (one
-        # bounded early-exit probe, memoized; results identical — the
-        # blocked strategies are parity-gated against this path).
+        # bounded early-exit probe, memoized, unless the caller passed
+        # an already-collected block; results identical — the blocked
+        # strategies are parity-gated against this path).
         # broadcast_queries=False is an explicit "queries don't fit the
         # driver" signal, and the blocked path collects them, so it
         # keeps the expression plan. The LongType guard keeps the output
         # id dtypes independent of which physical path wins (ADVICE r10:
-        # the blocked schema casts ids to long).
-        m = _bounded_query_count(
-            _drop_null_vectors(queries, query_vec_col), EXPR_MAX_QUERIES
+        # the blocked schema casts ids to long). A partly collected
+        # block holds QBLOCK_MIN_QUERIES rows, past this gate already.
+        m = (
+            len(qb.ids)
+            if qb.ids is not None
+            else _bounded_query_count(qb.frame, EXPR_MAX_QUERIES)
         )
         if m > EXPR_MAX_QUERIES and (
             _bounded_query_count(
@@ -397,7 +472,7 @@ def knn_join(
         ):
             return knn_join_blocked(
                 vectors,
-                queries,
+                qb,
                 k=k,
                 metric=metric,
                 filter_metadata=filter_metadata,
@@ -409,8 +484,7 @@ def knn_join(
     filtered = _drop_null_vectors(
         apply_metadata_filter(vectors, filter_metadata), vec_col
     )
-    queries = _drop_null_vectors(queries, query_vec_col)
-    qdf = queries.select(
+    qdf = qb.frame.select(
         F.col(query_id_col).alias("query_id"),
         F.col(query_vec_col).cast("array<double>").alias("_qvec"),
         *(
@@ -578,7 +652,7 @@ def _vector_matrix_size(
 
 def knn_join_blocked(
     vectors: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | QueryBlock,
     k: int = 10,
     metric: str = "cosine",
     filter_metadata: Mapping[str, Any] | None = None,
@@ -616,12 +690,14 @@ def knn_join_blocked(
       partitions — the transposed plan is ~10x on the same data).
     - ``"auto"`` (default): ``"queries"`` when M >= QBLOCK_MIN_QUERIES
       and the fp32 vector matrix fits QBLOCK_VECTOR_BUDGET_BYTES, else
-      ``"vectors"``. Sizing jobs are cheap and cached: BOTH gates are
-      LIMIT-bounded counts that early-exit the moment the threshold is
-      crossed — the vector side probes ``dim`` from one row and counts
-      at most ``budget_rows + 1`` rows, so "too big, stay
-      vector-blocked" costs O(budget) rows even against a 100 TB
-      table. The probe is memoized per analyzed-plan fingerprint with
+      ``"vectors"``. Both gates are LIMIT-bounded and early-exit the
+      moment the threshold is crossed. The query side collects at most
+      QBLOCK_MIN_QUERIES rows, which is the whole block the
+      vector-blocked plan broadcasts whenever it is smaller; the
+      vector side probes ``dim`` from one row and counts at most
+      ``budget_rows + 1`` rows, so "too big, stay vector-blocked"
+      costs O(budget) rows even against a 100 TB table. The vector
+      probe is memoized per analyzed-plan fingerprint with
       the same staleness contract as ``rebalance_for_compute`` (a
       table whose file set changed under an identical plan can serve
       one stale decision — the consequence is a suboptimal block side,
@@ -635,18 +711,16 @@ def knn_join_blocked(
     if block_side not in ("auto", "vectors", "queries"):
         raise ValueError(f"unknown block_side {block_side!r}")
     _validate(vectors, k, vec_col=vec_col, id_col=id_col)
-    _validate(queries, k, query_vec_col=query_vec_col, query_id_col=query_id_col)
+    qb = query_block(queries, query_id_col, query_vec_col)
     filtered = _drop_null_vectors(
         apply_metadata_filter(vectors, filter_metadata), vec_col
     )
-    queries = _drop_null_vectors(queries, query_vec_col)
     if block_side == "auto":
         # cheapest gate first: a small query batch (the common store
-        # search) pays ONE bounded count and stays on the vector-
-        # blocked path; the limit makes the probe early-exit on a
-        # huge query set instead of scanning it
-        m_probe = queries.limit(QBLOCK_MIN_QUERIES).count()
-        if m_probe >= QBLOCK_MIN_QUERIES:
+        # search) is collected whole by this one bounded collect and
+        # stays on the vector-blocked path; the limit keeps a huge
+        # query set on the executors
+        if not qb.collect(QBLOCK_MIN_QUERIES).complete:
             n_vec, dim, budget_rows = _vector_matrix_size(
                 filtered, vec_col, QBLOCK_VECTOR_BUDGET_BYTES
             )
@@ -656,7 +730,7 @@ def knn_join_blocked(
                 # cheaply (LIMIT cap+1) and falls through to the
                 # vector-blocked plan instead of flooding the driver
                 out = _knn_join_query_blocked(
-                    filtered, queries, k, metric,
+                    filtered, qb.frame, k, metric,
                     vec_col, id_col, query_vec_col, query_id_col,
                     max_rows=2 * budget_rows,
                 )
@@ -664,19 +738,11 @@ def knn_join_blocked(
                     return out
     elif block_side == "queries":
         return _knn_join_query_blocked(
-            filtered, queries, k, metric,
+            filtered, qb.frame, k, metric,
             vec_col, id_col, query_vec_col, query_id_col,
         )
 
-    # Arrow-path collect (toPandas): the query block lands as numpy
-    # arrays, not Python Row objects — a 10-30x transient-memory saving
-    # on wide batches (ADVICE r9).
-    qpdf = queries.select(query_id_col, query_vec_col).toPandas()
-    if qpdf.empty:
-        raise ValueError("empty query set")
-    q_ids = qpdf[query_id_col].to_numpy(dtype=np.int64)
-    Q = np.asarray(qpdf[query_vec_col].to_list(), dtype=np.float64)
-    del qpdf
+    q_ids, Q = qb.arrays()
     if metric == "cosine":
         Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), NORM_EPS)
     sc = vectors.sparkSession.sparkContext
@@ -1021,7 +1087,7 @@ def _knn_join_query_blocked(
 
 def knn_join_chunked(
     vectors: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | QueryBlock,
     k: int = 10,
     metric: str = "cosine",
     filter_metadata: Mapping[str, Any] | None = None,
@@ -1052,8 +1118,8 @@ def knn_join_chunked(
     (performance/mlx_optimized.py:59-88); the reference caps at one
     in-memory (M,N) matmul and has no huge-Q story at all.
     """
-    _validate(queries, k, query_vec_col=query_vec_col, query_id_col=query_id_col)
-    queries = _drop_null_vectors(queries, query_vec_col)
+    _validate(vectors, k, vec_col=vec_col, id_col=id_col)
+    queries = query_block(queries, query_id_col, query_vec_col).frame
     if cache_queries:
         # the sizing count below is then the ONLY full pass over the
         # query side: every per-chunk collect reads the cached blocks

@@ -40,8 +40,8 @@ Spark-first execution, two physical strategies behind ``strategy``:
    accepts).
 
 ``"auto"`` (default) picks ``"expression"`` for small query-token sets
-(bounded early-exit count, same memo discipline as knn_join's
-delegation probe) and ``"blocked"`` past it.
+and ``"blocked"`` past it, counting the query tokens in the one block
+collect the blocked sweep reuses.
 
 Metrics: ``cosine`` and ``dot_product``. (Euclidean has no natural
 max-pooling semantics — "closest token" would be a MIN — and no
@@ -63,11 +63,13 @@ from mlx_vector_db_spark.functions.vector import (
     score_for_metric,
 )
 from mlx_vector_db_spark.operators.knn import (
+    QueryBlock,
     _bounded_query_count,
     _drop_null_vectors,
     _register_broadcast,
     _validate,
     apply_metadata_filter,
+    query_block,
 )
 from mlx_vector_db_spark.operators.topk import top_k_per_group
 from mlx_vector_db_spark.rebalance import rebalance_for_compute
@@ -196,7 +198,7 @@ def pack_doc_tokens(
 
 def maxsim_join(
     doc_tokens: DataFrame,
-    query_tokens: DataFrame,
+    query_tokens: DataFrame | QueryBlock,
     k: int = 10,
     metric: str = "cosine",
     doc_id_col: str = "doc_id",
@@ -258,34 +260,29 @@ def maxsim_join(
     else:
         _validate(doc_tokens, k, doc_id_col=doc_id_col, vec_col=vec_col)
         doc_tokens = apply_metadata_filter(doc_tokens, filter_metadata)
-    _validate(
-        query_tokens, k, query_id_col=query_id_col, query_vec_col=query_vec_col
-    )
+    queries = query_block(query_tokens, query_id_col, query_vec_col)
     if strategy == "blocked":
         _require_integral_ids(
             doc_tokens, doc_id_col, "maxsim_join(strategy='blocked')"
         )
         _require_integral_ids(
-            query_tokens, query_id_col, "maxsim_join(strategy='blocked')"
+            queries.frame, query_id_col, "maxsim_join(strategy='blocked')"
         )
-    queries = _drop_null_vectors(query_tokens, query_vec_col)
 
     if strategy == "auto":
         # The blocked path emits long ids (mapInPandas fixed schema), the
         # expression path preserves the caller's id types — so, exactly
         # like knn_join's delegation gate (ADVICE r10), auto only
         # delegates when BOTH id columns are already LongType; otherwise
-        # output dtypes would depend on the query-token count.
+        # output dtypes would depend on the query-token count. The gate
+        # collects the whole token block: the blocked sweep needs it
+        # all, and the expression path broadcasts it anyway.
         from pyspark.sql.types import LongType
 
         ids_long = isinstance(
             doc_tokens.schema[doc_id_col].dataType, LongType
-        ) and isinstance(query_tokens.schema[query_id_col].dataType, LongType)
-        n_qtok = (
-            _bounded_query_count(queries, EXPR_MAX_QUERY_TOKENS)
-            if ids_long
-            else 0
-        )
+        ) and isinstance(queries.frame.schema[query_id_col].dataType, LongType)
+        n_qtok = len(queries.collect().ids) if ids_long else 0
         strategy = (
             "expression" if n_qtok <= EXPR_MAX_QUERY_TOKENS else "blocked"
         )
@@ -296,7 +293,7 @@ def maxsim_join(
 
     if strategy == "expression":
         return _maxsim_expression(
-            doc_tokens, queries, k, metric,
+            doc_tokens, queries.frame, k, metric,
             doc_id_col, vec_col, query_id_col, query_vec_col,
         )
     return _maxsim_blocked(
@@ -371,7 +368,7 @@ def _maxsim_expression(
 
 def _maxsim_blocked(
     doc_tokens: DataFrame,
-    queries: DataFrame,
+    queries: QueryBlock,
     k: int,
     metric: str,
     doc_id_col: str,
@@ -386,18 +383,11 @@ def _maxsim_blocked(
     candidate exchange reduced to O(tasks * M * k) by the same
     task-level exact top-k cut as knn_join_blocked (valid for the same
     reason: (score DESC, doc_id ASC) is a total order)."""
-    # Arrow-path collect; sort by query id so each query's tokens are a
-    # contiguous segment for the add.reduceat.
-    qpdf = (
-        queries.select(query_id_col, query_vec_col)
-        .orderBy(query_id_col)
-        .toPandas()
-    )
-    if qpdf.empty:
-        raise ValueError("empty query token set")
-    q_owner_ids = qpdf[query_id_col].to_numpy(dtype=np.int64)
-    Q = np.asarray(qpdf[query_vec_col].to_list(), dtype=np.float64)
-    del qpdf
+    # sort by query id (stable, driver-side) so each query's tokens are
+    # a contiguous segment for the add.reduceat
+    q_owner_ids, Q = queries.arrays()
+    by_query = np.argsort(q_owner_ids, kind="stable")
+    q_owner_ids, Q = q_owner_ids[by_query], Q[by_query]
     if metric == "cosine":
         Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), NORM_EPS)
     # query segment boundaries: q_starts[i]..q_starts[i+1] rows of Q

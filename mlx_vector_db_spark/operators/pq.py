@@ -54,9 +54,10 @@ from mlx_vector_db_spark.functions.vector import metric_ascending
 from mlx_vector_db_spark.operators.ann import _kmeans_numpy
 from mlx_vector_db_spark.operators.knn import (
     EXPR_MAX_QUERIES,
+    QueryBlock,
     _bounded_query_count,
-    _drop_null_vectors,
     knn_join,
+    query_block,
 )
 from mlx_vector_db_spark.operators.topk import top_k_per_group
 from mlx_vector_db_spark.rebalance import rebalance_for_compute
@@ -266,7 +267,7 @@ def train_pq(
 
 def pq_search_batch(
     coded: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | QueryBlock,
     pq: PQCodebooks,
     k: int = 10,
     metric: str = "cosine",
@@ -298,16 +299,12 @@ def pq_search_batch(
         raise ValueError(f"unknown metric {metric!r}")
     # engine-wide NULL rule (knn._drop_null_vectors): a NULL query
     # vector (or NULL element) produces no output rows instead of an
-    # inhomogeneous-shape crash in the collect below (the r9/r10 defect
-    # class, probed here in r11); Arrow-path collect (ADVICE r9).
-    queries = _drop_null_vectors(queries, query_vec_col)
-    qpdf = queries.select(query_id_col, query_vec_col).toPandas()
-    if len(qpdf) == 0:
-        raise ValueError("empty query set")
-    q_ids = qpdf[query_id_col].to_numpy(dtype=np.int64)
-    Q = np.asarray(qpdf[query_vec_col].to_list(), dtype=np.float64)
-    n_queries_driver = len(qpdf)
-    del qpdf
+    # inhomogeneous-shape crash in the collect (the r9/r10 defect
+    # class, probed here in r11); the block is collected once and
+    # handed on to the re-rank
+    queries = query_block(queries, query_id_col, query_vec_col)
+    q_ids, Q = queries.arrays()
+    n_queries_driver = len(q_ids)
     take = int(k) * int(overfetch)
     if exact_rerank and delegate_saturation is not None:
         # candidate-saturation delegation — the bq_search_batch rule
@@ -452,7 +449,7 @@ def pq_search_batch(
 
 def ivfpq_search_batch(
     coded: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | QueryBlock,
     pq: PQCodebooks,
     centroids: np.ndarray,
     k: int = 10,
@@ -486,15 +483,10 @@ def ivfpq_search_batch(
     if metric not in ("cosine", "euclidean", "dot_product"):
         raise ValueError(f"unknown metric {metric!r}")
     C = np.asarray(centroids, dtype=np.float64)  # (nlist, dim)
-    # engine-wide NULL rule + Arrow collect — see pq_search_batch
-    queries = _drop_null_vectors(queries, query_vec_col)
-    qpdf = queries.select(query_id_col, query_vec_col).toPandas()
-    if len(qpdf) == 0:
-        raise ValueError("empty query set")
-    q_ids = qpdf[query_id_col].to_numpy(dtype=np.int64)
-    Q = np.asarray(qpdf[query_vec_col].to_list(), dtype=np.float64)
-    n_queries_driver = len(qpdf)
-    del qpdf
+    # engine-wide NULL rule + one block collect — see pq_search_batch
+    queries = query_block(queries, query_id_col, query_vec_col)
+    q_ids, Q = queries.arrays()
+    n_queries_driver = len(q_ids)
     nlist = len(C)
     nprobe = max(1, min(int(nprobe), nlist))
     ascending = metric_ascending(metric)
@@ -614,7 +606,7 @@ def ivfpq_search_batch(
 
 def tune_overfetch(
     coded: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | QueryBlock,
     pq: PQCodebooks,
     k: int = 10,
     target_recall: float = 0.9,
@@ -658,6 +650,8 @@ def tune_overfetch(
         else [1, 2, 4, 8, 16, 32]
     )
     drop_cols = [code_col] + (["centroid_id"] if centroids is not None else [])
+    # one query collect serves every rung of the ladder
+    queries = query_block(queries, query_id_col, query_vec_col)
     exact = (
         knn_join(
             coded.drop(*drop_cols),

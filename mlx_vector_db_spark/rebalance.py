@@ -178,38 +178,115 @@ def _row_group_starved(narrow: DataFrame, target: int) -> bool:
         return False
 
 
+def _children(node) -> list:
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _planned_partitions(narrow: DataFrame) -> int:
+    """How many partitions ``narrow`` will run with, read from its
+    physical plan: one planning pass and no Spark job.
+
+    ``df.rdd.getNumPartitions()`` answers exactly but is not free: under
+    AQE, building the RDD materialises every shuffle stage in the plan,
+    so on a computed frame (a scan semi-joined against a candidate set)
+    the probe ran the whole pipeline once while planning and again at
+    the action. The walk reads the node that decides the count instead:
+
+    - a leaf builds its RDD (driver-side file splits, no job); a cached
+      frame reads its cached plan;
+    - a ``repartition(n)`` exchange keeps ``n``, and a single-partition
+      node is 1;
+    - any other shuffle is coalesced by AQE from its map-output size.
+      Parallelism-first coalescing keeps ``target`` partitions once the
+      shuffle holds ``minPartitionSize`` per core (``advisoryPartition
+      SizeInBytes`` otherwise), so the planner's size estimate of the
+      frame stands in for the run-time size;
+    - a union sums its children; a broadcast side never sets the count.
+    """
+    spark = narrow.sparkSession
+    qe = narrow._jdf.queryExecution()
+
+    def coalesced(n: int) -> int:
+        conf = spark.conf
+        if (
+            conf.get("spark.sql.adaptive.enabled") != "true"
+            or conf.get("spark.sql.adaptive.coalescePartitions.enabled") != "true"
+        ):
+            return n
+        per_part = conf.get(
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+            if conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst")
+            == "true"
+            else "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+        )
+        per_part = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            per_part
+        )
+        est = int(qe.optimizedPlan().stats().sizeInBytes())
+        return max(1, min(n, est // max(1, per_part)))
+
+    def walk(node) -> int:
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if name == "InMemoryTableScanExec":
+            return walk(node.relation().cachedPlan())
+        if node.outputPartitioning().numPartitions() == 1:
+            return 1
+        if name == "ShuffleExchangeExec":
+            n = node.numPartitions()
+            if node.shuffleOrigin().toString() == "REPARTITION_BY_NUM":
+                return n
+            return coalesced(n)
+        kids = [
+            c for c in _children(node)
+            if c.outputPartitioning().getClass().getSimpleName()
+            != "BroadcastPartitioning"
+        ]
+        if not kids:
+            return node.execute().getNumPartitions()
+        if name == "UnionExec":
+            return sum(walk(c) for c in kids)
+        n = walk(kids[0])
+        return min(n, node.numPartitions()) if name == "CoalesceExec" else n
+
+    return walk(qe.executedPlan())
+
+
 def _under_partitioned(narrow: DataFrame, target: int) -> bool:
     """True when ``narrow`` plans to fewer than ``target`` partitions —
     or plans enough SPLITS but scans fewer than ``target`` parquet row
     groups (see :func:`_row_group_starved`), which starves compute just
     the same.
 
-    ``df.rdd.getNumPartitions()`` converts the whole plan to a physical
-    RDD on every call — cheap but nonzero, and this guard sits inside
-    every signature/curation operator. The decision is memoized on the
-    ANALYZED plan's semanticHash: same logical plan + same parallelism
-    → same answer, so repeated invocations over the same table (bench
-    reps, multi-stage pipelines re-deriving a projection) skip the
-    conversion. A table whose file count changed under an identical
-    plan can serve one stale decision; the consequence is a missing or
-    extra repartition of a narrow projection, never wrong results.
+    The count comes from :func:`_planned_partitions`: one physical
+    planning pass, no job. Planning is cheap but nonzero, and this
+    guard sits inside every signature/curation operator, so the
+    decision is memoized on the ANALYZED plan's semanticHash: same
+    logical plan + same parallelism → same answer, and repeated
+    invocations over the same table (bench reps, multi-stage pipelines
+    re-deriving a projection) skip the planning. A table whose file
+    count changed under an identical plan can serve one stale decision;
+    the consequence is a missing or extra repartition of a narrow
+    projection, never wrong results. Where the plan cannot be read
+    (Spark Connect, internal-API drift) the guard stays off.
     """
     try:
-        app_id = narrow.sparkSession.sparkContext.applicationId
         key = (
-            app_id,
+            narrow.sparkSession.sparkContext.applicationId,
             narrow._jdf.queryExecution().analyzed().semanticHash(),
             target,
         )
     except Exception:  # pragma: no cover — connect / internal-API drift
-        return narrow.rdd.getNumPartitions() < target or _row_group_starved(
-            narrow, target
-        )
+        return False
     hit = _PROBE_CACHE.get(key)
     if hit is None:
-        hit = narrow.rdd.getNumPartitions() < target or _row_group_starved(
-            narrow, target
-        )
+        try:
+            hit = _planned_partitions(narrow) < target
+        except Exception:  # pragma: no cover — internal-API drift
+            hit = False
+        hit = hit or _row_group_starved(narrow, target)
         if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
             _PROBE_CACHE.clear()
         _PROBE_CACHE[key] = hit
@@ -244,8 +321,9 @@ def rebalance_for_compute(
     """Project ``df`` down to ``cols`` (all columns when omitted) and,
     if the plan has fewer partitions than ``defaultParallelism``, round-
     robin repartition it so the downstream per-row compute uses every
-    core. The partition-count probe plans the query but launches no job,
-    and is memoized per plan fingerprint (see :func:`_under_partitioned`).
+    core. The partition-count probe plans the query but launches no job
+    (see :func:`_planned_partitions`), and is memoized per plan
+    fingerprint (see :func:`_under_partitioned`).
 
     ``split_bytes`` makes the width SCALE-ADAPTIVE for lighter kernels:
     the repartition width becomes ``clamp(input_bytes / split_bytes, 2,
@@ -257,9 +335,12 @@ def rebalance_for_compute(
     while the same rebalance wins 1.9x at sf1 (2.86 -> 1.48 s). A
     bytes-proportional width keeps both regimes: tiny input -> a couple
     of tasks (~serial, no overhead cliff), big input -> full width.
-    Callers whose per-byte compute is heavy (md5 n-gram hashing, K=128
-    minhash permutations) omit it — for them even a sub-MB input is
-    CPU-seconds of work and full width measured strictly faster. When
+    Tokenize-class callers pass ``LIGHT_KERNEL_SPLIT_BYTES``; callers
+    whose per-byte compute is heavy (md5 n-gram hashing, K=128 minhash
+    permutations, simhash votes) pass ``HEAVY_KERNEL_SPLIT_BYTES``, which
+    reaches full width from ~1.5 MB (measured r14). A caller that omits
+    it (the vector kernels do) gets full width whenever the frame is
+    under-partitioned. When
     the input bytes cannot be read (remote FS, non-file lineage) the
     width falls back to full parallelism — at cluster scale the guard
     is a no-op anyway (any real wide table passes the partition-count

@@ -2810,6 +2810,9 @@ class VectorStore:
         """
         metric = metric or self.config.metric
         df = self.to_df()
+        # every kernel below takes this block, so the call collects its
+        # queries at most once (see knn.QueryBlock)
+        queries = knn.query_block(queries)
         # quantized tiers are tried SEQUENTIALLY, best-compression
         # first, and a tier's failure falls through to the next — the
         # same try-each-tier fallback chain query() keeps (ADVICE r10:
@@ -2822,16 +2825,14 @@ class VectorStore:
             # store, the "pruning" semi-join keeps most rows, the
             # candidate exchange costs overfetch x the exact sweep's,
             # and every quantized first pass is pure overhead —
-            # measured 8.3x at 10k queries x 2M rows. Both probes are
-            # LIMIT-bounded (early-exit) and memoized.
+            # measured 8.3x at 10k queries x 2M rows. M comes from the
+            # block collect the quantized kernels need anyway; the
+            # store probe is LIMIT-bounded (early-exit) and memoized.
             from mlx_vector_db_spark.operators.knn import (
                 _bounded_query_count,
             )
 
-            # the query count probe is bounded at 64k: past it the
-            # saturation bound below UNDERestimates (a conservative
-            # miss keeps the quantized pass; never wrong results)
-            m_probe = _bounded_query_count(queries, 65_536)
+            m_probe = len(queries.collect().ids)
 
             def _tier_saturated(take: int) -> bool:
                 # ADVICE r11: the guard uses the take of the tier
@@ -2882,8 +2883,11 @@ class VectorStore:
                         metric=metric, overfetch=int(overfetch),
                         exact_rerank=False,
                     )
-                cand_ids = cand.select("id").distinct()
-                df = df.join(cand_ids, on="id", how="left_semi").drop("pq_code")
+                # a left-semi join keeps each store row once however
+                # many queries named it: the ids need no distinct
+                df = df.join(
+                    cand.select("id"), on="id", how="left_semi"
+                ).drop("pq_code")
                 pruned = True
             except Exception:
                 df = self.to_df()
@@ -2908,8 +2912,9 @@ class VectorStore:
                     metric=metric, overfetch=max(int(overfetch), 16),
                     code_col="bq_code", exact_rerank=False,
                 )
-                cand_ids = cand.select("id").distinct()
-                df = df.join(cand_ids, on="id", how="left_semi").drop("bq_code")
+                df = df.join(
+                    cand.select("id"), on="id", how="left_semi"
+                ).drop("bq_code")
                 pruned = True
             except Exception:
                 df = self.to_df()

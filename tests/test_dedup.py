@@ -667,6 +667,50 @@ def test_minhash_numpy_kernel_parity(spark, corpus):
     assert sorted(map(tuple, ref.collect())) == sorted(map(tuple, new.collect()))
 
 
+@pytest.mark.parametrize("batch_rows", [10_000, 1, 3])
+def test_minhash_numpy_kernel_trailing_empty_docs(spark, corpus, batch_rows):
+    """A batch that ends in an empty doc and a NULL doc (empty and NULL
+    shingle arrays): every signature still equals a pure-Python MinHash
+    of the doc's shingle hashes, bit for bit, whether the frame is one
+    Arrow batch or split into batches of 1 or 3 rows (3 makes a batch
+    end on the empty doc right after non-empty ones). The doc before
+    them has two shingles, so a segment cut short by one element shows
+    in about half of the signature registers."""
+    from pyspark.sql import functions as F
+
+    from mlx_vector_db_spark.functions.text import tokens
+
+    rows = list(corpus[:4]) + [(500, "one two three four"), (9001, ""), (9002, None)]
+    df = spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
+    num_hashes, seed = 16, 7
+    a, b = D._minhash_coeffs(num_hashes, seed)
+    p = D._MERSENNE_P
+    hdf = df.select(
+        F.col("doc_id").alias("_id"), "text", tokens("text").alias("_toks")
+    ).select(
+        "_id",
+        F.when(F.col("text").isNull(), F.lit(None).cast("array<bigint>"))
+        .otherwise(D._hashed_shingles_from_tokens(F.col("_toks"), 3))
+        .alias("_sh"),
+    )
+    want = {}
+    for r in hdf.collect():
+        hs = [h & 0xFFFFFFFF for h in (r["_sh"] or [])]
+        want[r["_id"]] = tuple(
+            min(((h * a[k] + b[k]) % p for h in hs), default=p)
+            for k in range(num_hashes)
+        )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(batch_rows))
+    try:
+        got = D._signature_numpy(hdf, num_hashes, a, b).drop("_sh").collect()
+    finally:
+        spark.conf.set(key, old)
+    assert {r["_id"]: tuple(r[1:]) for r in got} == want
+    assert want[9001] == want[9002] == (p,) * num_hashes
+
+
 def test_minhash_pairs_kernel_parity(spark, corpus_df):
     """End-to-end: minhash_lsh_pairs(sig_kernel='numpy') emits exactly
     the rows of the expr form on a real corpus."""
